@@ -243,10 +243,12 @@ def convert_cdm(cdm_entities: DataFrame, cdm_rels: DataFrame,
              .select("entity_name", F.col("extends").alias("src"))
              .join(ents.select(F.col("entity_name").alias("src")),
                    "src", "left_semi"))
-    # one driver action per round (r6 — was an isEmpty() probe PLUS an
-    # eager checkpoint per round): the frontier count materializes the
-    # lazily-checkpointed frontier, and the chain checkpoint rides the
-    # same job through the anti-join lineage
+    # one count per round (r6 — was an isEmpty() probe PLUS an eager
+    # checkpoint per round). It is not the round's only job: under AQE each
+    # localCheckpoint(eager=False) call runs the shuffle and broadcast
+    # stages of its input as jobs of their own; the count runs only the
+    # frontier's final stage, and the chain's final stage runs in the job
+    # that first reads it (the next frontier's anti-join)
     chain = self_rows
     cur = edges.withColumn("depth", F.lit(1)).localCheckpoint(eager=False)
     n_cur = cur.count()
@@ -255,12 +257,14 @@ def convert_cdm(cdm_entities: DataFrame, cdm_rels: DataFrame,
             break
         chain = chain.unionByName(cur).dropDuplicates(
             ["entity_name", "src"]).localCheckpoint(eager=False)
-        cur = ((cur.alias("a")
-                .join(edges.alias("b"),
-                      F.col("a.src") == F.col("b.entity_name"))
-                .select(F.col("a.entity_name").alias("entity_name"),
-                        F.col("b.src").alias("src"))
-                .withColumn("depth", F.lit(d + 1))
+        # fresh names on both sides: cur descends from edges, so their
+        # columns share attribute ids and the self-join would not resolve
+        # (Spark fails with "key not found: src" on chains >= 2 deep)
+        cur = ((cur.select("entity_name", F.col("src").alias("mid"))
+                .join(edges.select(F.col("entity_name").alias("mid"),
+                                   F.col("src").alias("up")), "mid")
+                .select("entity_name", F.col("up").alias("src"),
+                        F.lit(d + 1).alias("depth"))
                 .join(chain, ["entity_name", "src"], "left_anti"))
                .localCheckpoint(eager=False))
         n_cur = cur.count()

@@ -80,9 +80,12 @@ def transitive_closure(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     ontology), so every round is a small-table join.
     """
     closure = edges.select(F.col("child").alias("src"), F.col("parent").alias("dst"))
-    # one driver action per round: the count() materializes the lazy
-    # checkpoint AND is the convergence check (vs old-count comparison,
-    # which re-counted the previous round's frame every round).
+    # one count() per round, and it is the convergence check (vs old-count
+    # comparison, which re-counted the previous round's frame every round).
+    # It is not the round's only job: under AQE, localCheckpoint(eager=False)
+    # itself runs every shuffle and broadcast stage of its input, one job
+    # each; the count() runs only the final stage, which fills the
+    # checkpoint.
     # (r6 note: seeding this first action with a double-double to save one
     # round was tried and measured SLOWER — the seed joins run over the
     # un-checkpointed edge lineage and cost more than the saved action.)
@@ -98,11 +101,11 @@ def transitive_closure(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
                          F.col("b.dst").alias("dst")))
         return c.unionByName(grown).dropDuplicates()
 
-    # TWO doubling steps per driver round-trip (4x reachable depth per
-    # count). The intermediate closure stays lazy inside the same job;
-    # both sides of the second self-join share its identical subplan, so
-    # Spark's ReusedExchange computes the intermediate dedup shuffle once.
-    # A converged first step just makes the second a no-op in the same job.
+    # TWO doubling steps per count (4x reachable depth per round). The
+    # intermediate closure is not checkpointed; both sides of the second
+    # self-join share its identical subplan, so Spark's ReusedExchange
+    # computes the intermediate dedup shuffle once. A converged first step
+    # just makes the second a no-op in the same round.
     for _ in range((max_rounds + 1) // 2):
         new_closure = double(double(closure)).localCheckpoint(eager=False)
         n = new_closure.count()

@@ -251,12 +251,13 @@ def embedding_near_duplicates(vectors: DataFrame, threshold: float = 0.95,
             hyperplane_signature(F.col(vec_col), dim, n_planes,
                                  offset=b * n_planes).alias("bucket"))
             for b in range(max(n_bands, 1))]
-        # precompute each vector's norm ONCE per row here (O(N) norm
-        # evaluations) instead of inside the pair-scoring expression
-        # (O(#pairs) — quadratic in bucket occupancy); the norm value is
-        # the identical expression over the identical input, so the cosine
-        # is bit-for-bit unchanged. The signed frame is materialized once:
-        # it feeds both self-join sides plus the bucket-size aggregate.
+        # precompute each vector's norm here, once per (row, band) since it
+        # follows the band explode (O(N × bands) norm evaluations), instead
+        # of inside the pair-scoring expression (O(#pairs) — quadratic in
+        # bucket occupancy); the norm value is the identical expression
+        # over the identical input, so the cosine is bit-for-bit unchanged.
+        # The signed frame is materialized once: it feeds both self-join
+        # sides plus the bucket-size aggregate.
         v = (v.select(id_col, vec_col, F.explode(F.array(*sigs)).alias("bs"))
              .select(id_col, vec_col, "bs.band", "bs.bucket",
                      _norm(F.col(vec_col)).alias("nrm"))

@@ -157,25 +157,23 @@ def extract_relationships(triples: DataFrame, classes: DataFrame,
     all_dom = domains.unionByName(fallback_dom)
     all_rng = ranges.unionByName(fallback_rng)
 
-    # skip accounting (J6 anti-joins) with reference-exact reason strings
-    d_set = all_dom.select("prop_uri").dropDuplicates()
-    r_set = all_rng.select("prop_uri").dropDuplicates()
-    no_d = props.join(F.broadcast(d_set), "prop_uri", "left_anti")
-    no_r = props.join(F.broadcast(r_set), "prop_uri", "left_anti")
-    no_both = no_d.join(F.broadcast(no_r), "prop_uri", "left_semi")
-    only_no_d = no_d.join(F.broadcast(no_both), "prop_uri", "left_anti")
-    only_no_r = no_r.join(F.broadcast(no_both), "prop_uri", "left_anti")
-
-    def _skip(df: DataFrame, reason: str) -> DataFrame:
-        return df.select(
-            F.lit("relationship").alias("item_type"),
-            uri_to_name(F.col("prop_uri")).alias("name"),
-            F.lit(reason).alias("reason"),
-            F.col("prop_uri").alias("uri"))
-
-    skipped = (_skip(no_both, "missing both domain and range")
-               .unionByName(_skip(only_no_d, "missing domain class"))
-               .unionByName(_skip(only_no_r, "missing range class")))
+    # skip accounting (J6), reference-exact reasons: props has one row per
+    # property, so left-joining it once to each flagged property set and
+    # picking the reason per row lists each skip once, each input planned once
+    d_set = all_dom.select("prop_uri", F.lit(True).alias("has_d")).distinct()
+    r_set = all_rng.select("prop_uri", F.lit(True).alias("has_r")).distinct()
+    no_d, no_r = F.col("has_d").isNull(), F.col("has_r").isNull()
+    skipped = (props
+               .join(F.broadcast(d_set), "prop_uri", "left")
+               .join(F.broadcast(r_set), "prop_uri", "left")
+               .where(no_d | no_r)
+               .select(
+                   F.lit("relationship").alias("item_type"),
+                   uri_to_name(F.col("prop_uri")).alias("name"),
+                   F.when(no_d & no_r, "missing both domain and range")
+                   .when(no_d, "missing domain class")
+                   .otherwise("missing range class").alias("reason"),
+                   F.col("prop_uri").alias("uri")))
 
     # J5: pair expansion + dedup, ids joined from the class table
     # (both sides schema-bounded → broadcast the range side)

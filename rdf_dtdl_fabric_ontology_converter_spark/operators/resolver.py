@@ -71,8 +71,10 @@ def resolve_class_targets(roots: DataFrame, expr: DataFrame,
         .select(*keys, "node").dropDuplicates()
 
     # single tagged frontier ('n' = class-expression node, 'l' = RDF list
-    # node): ONE expr join and ONE driver action (the count materializing
-    # the lazy checkpoint) per round, vs the old 2 joins + 5 jobs per round.
+    # node): ONE expr join and ONE count per round, vs the old 2 joins +
+    # 5 jobs per round. Under AQE, localCheckpoint(eager=False) itself
+    # runs the shuffle and broadcast stages of its input as jobs of their
+    # own; the count runs only the final stage, which fills the checkpoint.
     frontier = (bnode_roots
                 .select(*keys, F.lit("n").alias("tag"), "node")
                 .localCheckpoint(eager=False))
@@ -108,14 +110,15 @@ def resolve_class_targets(roots: DataFrame, expr: DataFrame,
                         F.col("obj").alias("node"))
                 .dropDuplicates())
 
-    # TWO expansion steps per driver round-trip: the first step stays lazy
+    # TWO expansion steps per count: the first step is not checkpointed
     # (lineage depth between checkpoints is bounded at 2 broadcast joins,
     # and its recompute cost is one schema-bounded broadcast join), only the
     # second is checkpointed + counted. A single convergence check covers
     # both steps — an empty first frontier just makes the second join a
-    # no-op inside the same job. Halves the fixed per-run job count of the
-    # dominant list-walk chains (rdf:first/rdf:rest alternation means real
-    # inputs need ~2 steps per list element anyway).
+    # no-op in the same round. Halves the round count (and the per-round
+    # checkpoint and count) of the dominant list-walk chains
+    # (rdf:first/rdf:rest alternation means real inputs need ~2 steps per
+    # list element anyway).
     for _ in range((max_depth + 1) // 2):
         step1 = (expand(frontier)
                  .join(visited, keys + ["tag", "node"], "left_anti"))

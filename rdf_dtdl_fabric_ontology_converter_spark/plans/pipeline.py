@@ -70,14 +70,17 @@ def build_graph(spark: SparkSession, triples_prov: DataFrame,
 
     # north rule: global sort-merge dedup of the emitted triples, with
     # hot-subject salting (popular entities can't pin one reducer).
-    # localCheckpoint materializes the deduped graph once — every later
-    # stage (B-D) re-reads it instead of re-running extraction per action.
+    # localCheckpoint keeps the deduped graph once — every later stage
+    # (B-D) re-reads it instead of re-running extraction per action. The
+    # eager=False call is not free under AQE: it runs the dedup's shuffle
+    # stages (extraction included) here; the count() below runs only the
+    # final stage, which fills the checkpoint.
     triples = dedup_triples(triples_prov,
                             spread_hot_subjects=True).localCheckpoint(eager=False)
 
-    # Materialize the deduped graph once, up front, so both iterative
-    # chains below start from the cached checkpoint instead of racing to
-    # materialize it.
+    # Finish materializing the deduped graph once, up front, so both
+    # iterative chains below start from the filled checkpoint instead of
+    # racing to materialize it.
     n_triples = triples.count()
 
     # Right-size downstream scan parallelism from the MEASURED graph size:

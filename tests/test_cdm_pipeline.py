@@ -37,6 +37,18 @@ EMPLOYEE_EXTENDS = json.dumps({
     }],
 })
 
+MANAGER_EXTENDS = json.dumps({
+    "jsonSchemaSemanticVersion": "1.0.0",
+    "definitions": [{
+        "entityName": "Manager",
+        "extendsEntity": "Employee",
+        "hasAttributes": [
+            {"name": "level", "dataType": "string"},
+            {"name": "salary", "dataType": "integer"},  # overrides Person's
+        ],
+    }],
+})
+
 MODEL_JSON = json.dumps({
     "name": "OrdersModel", "version": "1.0", "culture": "en-US",
     "entities": [
@@ -112,6 +124,25 @@ def test_inheritance_flattened(spark):
     types = {x["name"]: x["valueType"] for x in emp["properties"]}
     assert types["fullName"] == "String"  # child override type
     assert emp["base_entity_type_id"] is None  # flattened → no base ref
+
+
+def test_inheritance_flattened_three_levels(spark):
+    emap, _, _ = convert(spark, {"p": PERSON_SCHEMA, "e": EMPLOYEE_EXTENDS,
+                                 "m": MANAGER_EXTENDS})
+    mgr = emap["Manager"]
+    # grandparent attrs first, then the parent's, then the child's own;
+    # each override sits at the position of the nearest definition
+    assert [x["name"] for x in mgr["properties"]] == \
+        ["personId", "birthDate", "isActive", "employeeNumber", "fullName",
+         "level", "salary"]
+    types = {x["name"]: x["valueType"] for x in mgr["properties"]}
+    assert types["salary"] == "BigInt"  # Manager's override, not Decimal
+    assert types["fullName"] == "String"
+    assert mgr["base_entity_type_id"] is None
+    # the deeper chain leaves the two-level result unchanged
+    assert [x["name"] for x in emap["Employee"]["properties"]] == \
+        ["personId", "birthDate", "isActive", "salary", "employeeNumber",
+         "fullName"]
 
 
 def test_inheritance_not_flattened(spark):

@@ -6,11 +6,14 @@ inheritance, :157-181 multi-domain, :269-309 XSD matrix) — the P/R≥0.95
 oracle per BASELINE.json.
 """
 
+from collections import Counter
+
 import pytest
 
 import corpus
 from rdf_dtdl_fabric_ontology_converter_spark.sources.documents import docs_from_payloads
-from rdf_dtdl_fabric_ontology_converter_spark.plans.pipeline import run_pipeline
+from rdf_dtdl_fabric_ontology_converter_spark.plans.pipeline import (
+    build_graph, run_pipeline, triples_from_documents)
 
 
 def run_fixture(spark, name):
@@ -101,6 +104,49 @@ def test_rel_missing_range_skipped_with_reason(spark):
     skips = {(r["item_type"], r["name"], r["reason"])
              for r in res.skipped_items.collect()}
     assert ("relationship", "knows", "missing range class") in skips
+
+
+# one object property per J6 skip branch, plus two that must NOT be skipped
+REL_SKIP_REASONS_TTL = """
+@prefix owl: <http://www.w3.org/2002/07/owl#> .
+@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+@prefix ex: <http://example.org/> .
+ex:Person a owl:Class .
+ex:Org a owl:Class .
+ex:worksFor a owl:ObjectProperty ; rdfs:domain ex:Person ; rdfs:range ex:Org .
+ex:domainOnly a owl:ObjectProperty ; rdfs:domain ex:Person .
+ex:rangeOnly a owl:ObjectProperty ; rdfs:range ex:Org .
+ex:neither a owl:ObjectProperty .
+ex:usedBy a owl:ObjectProperty ; rdfs:range ex:Org .
+ex:usedOnly a owl:ObjectProperty .
+ex:alice a ex:Person .
+ex:acme a ex:Org .
+ex:alice ex:usedBy ex:acme .
+ex:alice ex:usedOnly ex:untyped .
+"""
+
+
+def test_rel_skip_reasons_exact(spark):
+    """All three J6 reasons, one row per skipped property. ``usedBy`` gets
+    its domain only from usage inference (explicit range) and is kept;
+    ``usedOnly`` gets an inferred domain but no range (untyped object)."""
+    docs = docs_from_payloads(spark, {"skips": REL_SKIP_REASONS_TTL})
+    triples_prov, parse_skips = triples_from_documents(docs)
+    res = build_graph(spark, triples_prov, parse_skips)
+    ex = "http://example.org/"
+    got = Counter(tuple(r) for r in res.skipped_items
+                  .select("item_type", "name", "reason", "uri").collect())
+    assert got == Counter([
+        ("relationship", "domainOnly", "missing range class",
+         ex + "domainOnly"),
+        ("relationship", "rangeOnly", "missing domain class",
+         ex + "rangeOnly"),
+        ("relationship", "neither", "missing both domain and range",
+         ex + "neither"),
+        ("relationship", "usedOnly", "missing range class", ex + "usedOnly"),
+    ])
+    assert {r["name"] for r in res.relationship_types.collect()} == \
+        {"worksFor", "usedBy"}
 
 
 @pytest.mark.parametrize("xsd,expected", [
